@@ -1,0 +1,9 @@
+package org.apache.spark.hepbench
+
+import org.apache.spark.SparkContext
+
+/** Access to the listener bus, which Spark keeps package-private: the
+  * benchmark drains it before reading what its listeners recorded. */
+object Bus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
