@@ -11,13 +11,8 @@ import graft.testdata.PagesGen
 /** CLI entry point — the analogue of the reference's `hepdata-validate`
   * (hepdata_validator/cli.py): validate a page table, print verdicts in the
   * reference's transcript shape ("X is valid." / "ERROR: X is invalid.",
-  * then per-file "\t error - <message>" lines), exit 1 when invalid.
-  *
-  * Usage:
-  *   graft.Cli --pages <parquet> [--expected <parquet>] [--spec <spec.json>]
-  *             [--manifest <path> --snapshot <id>] [--drift <sqlExpr>]
-  *             [--max-violations <n>] [--synthetic <n>:<profile>]
-  *   graft.Cli --dir <submission dir> | --file <single .yaml[.gz]>
+  * then per-file "\t error - <message>" lines), exit 1 when invalid; see
+  * [[Usage]] for the flags, exit 2 on any other argument.
   *
   * `--dir`/`--file` run the RAW-YAML path (cli.py:12-30 byte-for-byte:
   * header, print_valid_files in SchemaType order, per-file message blocks,
@@ -25,6 +20,25 @@ import graft.testdata.PagesGen
   * blocks print in name order, where the reference follows os.listdir's
   * filesystem-specific order. */
 object Cli {
+
+  val Usage: String =
+    """usage: graft.Cli --pages <parquet> [--expected <parquet>] [--spec <spec.json>]
+      |                 [--manifest <path> --snapshot <id>] [--drift <sqlExpr>]
+      |                 [--max-violations <n>] [--synthetic <n>:<profile>]
+      |       graft.Cli --dir <submission dir> | --file <single .yaml[.gz]>""".stripMargin
+
+  private val Flags = Set("pages", "expected", "spec", "manifest", "snapshot",
+    "drift", "max-violations", "synthetic", "dir", "file")
+
+  /** `--flag value` pairs by flag name; None when a flag is unknown or
+    * has no value. */
+  private def parseArgs(args: Array[String]): Option[Map[String, String]] = {
+    val pairs = args.grouped(2).toSeq
+    if (pairs.forall(p => p.length == 2 && p(0).startsWith("--") &&
+        Flags(p(0).drop(2))))
+      Some(pairs.map(p => p(0).drop(2) -> p(1)).toMap)
+    else None
+  }
 
   /** hepdata-validate transcript for a raw directory or single file.
     * Returns (lines, exitCode). */
@@ -63,9 +77,12 @@ object Cli {
 
   /** Testable entry: returns the exit code instead of calling sys.exit. */
   def run(args: Array[String]): Int = {
-    val opts = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
+    val opts = parseArgs(args) match {
+      case Some(o) => o
+      case None =>
+        Console.err.println(Usage)
+        return 2
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     // don't tear down a session we didn't create (in-process callers/tests)
     val ownSession = SparkSession.getActiveSession.isEmpty

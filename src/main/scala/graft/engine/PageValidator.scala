@@ -48,10 +48,6 @@ object PageValidator {
       pages: DataFrame,
       langDim: DataFrame,
       expectedText: DataFrame,
-      // plain hash agg: map-side combine already collapses hot keys for
-      // count state; the explicit salted path (one extra exchange) is for
-      // aggregates whose per-key state partial agg can't reduce
-      salted: Boolean = false,
       htmlMaxBytes: Long = 10485760L,
       /** optional zero-extra-pass metrics: observed on the row-rule branch
         * (which every input row flows through), readable via
@@ -69,8 +65,9 @@ object PageValidator {
     }
     val rowViolations = ConstraintCompiler.violations(spec, observedPages)
 
-    val dups = (if (salted) Passes.duplicatesSalted(pages, "url")
-                else Passes.duplicates(pages, "url"))
+    // plain hash agg: map-side combine already collapses hot keys for
+    // count state (Passes.duplicatesSalted spells the salting out)
+    val dups = Passes.duplicates(pages, "url")
     val dupViolations = dups.select(
       lit(-1).as("part_id"), col("url"),
       lit(100).as("rule_seq"), lit("unique:url").as("rule_id"),

@@ -96,13 +96,11 @@ object Passes {
     * (measured 10.9 → 6.9 s for this pass at 10M docs, local[8]). The build
     * side is narrow (key + 64-char hex) and bounded per partition by AQE
     * partition sizing; AQE skew-join still splits oversized partitions for
-    * SHJ. Pass `preferSortMerge = true` to restore the sort-merge plan
-    * where per-partition memory is tighter than sort+spill capacity. */
+    * SHJ. */
   def textInvariantViolations(
       pages: DataFrame, key: String, textCol: String,
       expected: DataFrame, expectedHashCol: String,
-      carry: Seq[String] = Nil,
-      preferSortMerge: Boolean = false): DataFrame = {
+      carry: Seq[String] = Nil): DataFrame = {
     // sha via the thread-local-digest kernel: value-identical to
     // sha2(bin, 256), which pays a MessageDigest.getInstance per row
     val sha = org.apache.spark.sql.graft.ColumnBridge.column(
@@ -110,9 +108,8 @@ object Passes {
         .expression(col(textCol).cast("binary"))))
     val keep = (col(key) +: carry.map(col)) :+ sha.as("_actual")
     val exp = expected.select(col(key), col(expectedHashCol).as("_expected"))
-    val expSide = if (preferSortMerge) exp else exp.hint("shuffle_hash")
     pages.select(keep: _*)
-      .join(expSide, Seq(key))
+      .join(exp.hint("shuffle_hash"), Seq(key))
       .where(col("_actual") =!= col("_expected"))
   }
 

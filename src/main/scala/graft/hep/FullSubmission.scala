@@ -27,7 +27,7 @@ object FullSubmission {
 
   final case class Result(
       messages: DataFrame, // (file, k0..k3, level, message) — sort by keys
-      validDataFiles: DataFrame) // (file) data files that fully validated
+      validDataFiles: DataFrame) // (file, docIdx) data files that fully validated
 
   private def msg(file: Column, k0: Column, k1: Int, k2: Column, k3: Column,
       level: String, m: Column): Column =
@@ -37,7 +37,7 @@ object FullSubmission {
 
   /** All orchestration messages, assuming the submission file itself already
     * passed [[SubmissionRules]] (the reference short-circuits otherwise,
-    * :180-188 — see [[validateAll]]).
+    * :180-188 — see [[validate]]).
     *
     * `docs` may carry a `dataSchema` column (remote-schema URL analogue,
     * ref :331-347): a doc whose dataSchema is not in `knownSchemas` gets
@@ -189,7 +189,7 @@ object FullSubmission {
     // zero data-validator violations (ref: valid_files DATA bookkeeping)
     val validData = checkable.join(broadcast(vFiles),
         checkable("dataFile") === vFiles("file"), "left_anti")
-      .select(col("dataFile").as("file"))
+      .select(col("dataFile").as("file"), col("docIdx"))
 
     Result(allMsgs, validData)
   }
@@ -231,19 +231,16 @@ object FullSubmission {
     * writes each table's data to `<name with ' '→'_', '/'→'-'>.yaml` and
     * validates as usual; here the split is logical — the derived file name
     * keys the data rows, the "directory" is exactly the derived file set,
-    * the unreferenced sweep is off, and data failures are attributed to the
-    * submission path with a " (<name>)" table suffix.
+    * and [[validate]] runs with `singleYaml = true`.
     *
     * `docs`: (docIdx, name, resources) — name null for the header doc.
-    * `dataRows`: HepRow-shaped, `file` = the derived data-file name.
-    * Returns (file, seq, message, level) like [[validateAll]]. */
+    * `dataRows`: HepRow-shaped, `file` = the derived data-file name. */
   def validateSingleYaml(
       spark: SparkSession,
       sub: DataFrame,
       submissionPath: String,
       docs: DataFrame,
-      dataRows: DataFrame,
-      version: SchemaVersion = SchemaVersion.Default): DataFrame = {
+      dataRows: DataFrame): Report = {
     val derived = concat(
       regexp_replace(regexp_replace(col("name"), " ", "_"), "/", "-"),
       lit(".yaml"))
@@ -253,20 +250,10 @@ object FullSubmission {
     val files = docs2.where(col("hasDataFile"))
       .select(col("dataFile").as("fname"), lit(1000L).as("size"),
         lit(true).as("parseable"), lit(null).cast("string").as("parseError"))
-    val dataViolations = HepDataRules.violations(dataRows, version)
+    val dataViolations = HepDataRules.violations(dataRows)
       .select(col("file"), col("seq"), col("message"))
-    val subMsgs = SubmissionRules.violations(sub)
-    if (!subMsgs.isEmpty) {
-      val hdr = spark.createDataFrame(
-        Seq((submissionPath, -1, s"$submissionPath is invalid HEPData YAML.", "error")))
-        .toDF("file", "seq", "message", "level")
-      hdr.unionByName(subMsgs.select(lit(submissionPath).as("file"), col("seq"),
-        col("message"), col("level")))
-        .orderBy("seq")
-    } else {
-      ordered(checks(spark, submissionPath, docs2, files, dataViolations,
-        version = version, singleYaml = true).messages)
-    }
+    validate(spark, sub, submissionPath, docs2, files, dataViolations,
+      singleYaml = true)
   }
 
   /** (file, seq, message, level) in emission order. `seq` is DERIVED from
@@ -293,30 +280,87 @@ object FullSubmission {
       .orderBy("file", "seq")
   }
 
-  /** Full pipeline with the reference's short-circuit: if submission.yaml
-    * fails [[SubmissionRules]], only its own messages (prefixed by the
-    * "is invalid HEPData YAML" header) are returned (:180-188). */
-  def validateAll(
+  /** What `hepdata-validate` reports for one submission (ref cli.py:12-30). */
+  final case class Report(
+      messages: DataFrame, // (file, seq, message, level)
+      validDataFiles: Seq[String], // bare names, submission-doc order
+      subValid: Boolean, // print_valid_files' SUBMISSION/SINGLE_YAML entry
+      fileOrder: Seq[String]) // reference messages-dict insertion order
+
+  /** The report of a submission that stops at `file`: only its error
+    * `message` prints. */
+  def failed(spark: SparkSession, file: String, message: String): Report =
+    rejected(file, errorRow(spark, file, 0L, message))
+
+  private def rejected(file: String, messages: DataFrame): Report =
+    Report(messages, Nil, subValid = false, Seq(file))
+
+  private def errorRow(spark: SparkSession, file: String, seq: Long,
+      message: String): DataFrame =
+    spark.createDataFrame(Seq((file, seq, message, "error")))
+      .toDF("file", "seq", "message", "level")
+
+  /** One submission from its ingested tables — the single driver behind
+    * directories, single files and in-memory tables. If `sub` (the
+    * single-row SubFile table) fails [[SubmissionRules]], only its own
+    * messages are reported under one header line (the reference's
+    * short-circuit, :180-188). Otherwise [[checks]] runs over
+    * `docs`, `files` and `dataViolations`, messages come out [[ordered]],
+    * and print_valid_files' bookkeeping is worked out once.
+    *
+    * The keyed messages are materialised by an eager local checkpoint: the
+    * report stays valid after the inputs are gone, nothing enters the
+    * session's cache, and the blocks are freed once the report is dropped. */
+  def validate(
       spark: SparkSession,
-      sub: DataFrame, // single-row SubFile table
+      sub: DataFrame,
       submissionPath: String,
       docs: DataFrame,
       files: DataFrame,
       dataViolations: DataFrame,
-      sizeLimit: Long = SizeLimit): DataFrame = {
+      singleYaml: Boolean = false): Report = {
     val subMsgs = SubmissionRules.violations(sub)
     // driver-side branch on a tiny aggregate — same shape as the reference's
     // short-circuit; the expensive distributed work only runs when needed
-    if (!subMsgs.isEmpty) {
-      val hdr = spark.createDataFrame(
-        Seq((submissionPath, -1, s"$submissionPath is invalid HEPData YAML.", "error")))
-        .toDF("file", "seq", "message", "level")
-      hdr.unionByName(subMsgs.select(lit(submissionPath).as("file"), col("seq"),
-        col("message"), col("level")))
-        .orderBy("seq")
-    } else {
-      ordered(checks(spark, submissionPath, docs, files, dataViolations,
-        sizeLimit).messages)
+    if (!subMsgs.isEmpty)
+      return rejected(submissionPath,
+        errorRow(spark, submissionPath, -1L,
+          s"$submissionPath is invalid HEPData YAML.")
+          .unionByName(subMsgs.select(lit(submissionPath).as("file"),
+            col("seq").cast("long").as("seq"), col("message"), col("level")))
+          .orderBy("seq"))
+
+    val res = checks(spark, submissionPath, docs, files, dataViolations,
+      singleYaml = singleYaml)
+    val keyed = res.messages.localCheckpoint()
+    // print_valid_files lists the submission unless a message flips
+    // is_valid_submission_doc. In directory mode that is a resource check,
+    // a data_file '/' check or a failed schema dispatch — missing/oversized
+    // data files, parse errors and invalid data all `return` WITHOUT
+    // flipping it (ref: _check_doc, :271-347). In single-YAML mode every
+    // message is attributed to the one file and invalidates it.
+    val invalidating =
+      if (singleYaml) lit(1)
+      else when(col("k1") === 0 ||
+          (col("k1") === 1 && (col("k2") === 0 || col("k2") === 3)), 1)
+        .otherwise(0)
+    val firsts = keyed.groupBy(col("file"))
+      .agg(min(struct(col("k0"), col("k1"), col("k2"), col("k3"))).as("fk"),
+        sum(invalidating).as("invalidating"))
+      .collect()
+    val subValid = firsts.forall(_.getAs[Long]("invalidating") == 0)
+    val messages = ordered(keyed)
+    if (singleYaml) Report(messages, Nil, subValid, Seq(submissionPath))
+    else {
+      val fileOrder = firsts
+        .map(r => (r.getString(0), r.getStruct(1)))
+        .sortBy { case (f, k) =>
+          (k.getInt(0), k.getInt(1), k.getInt(2), k.getInt(3), f) }
+        .map(_._1).toSeq
+      // submission-doc order, like the reference's valid_files bookkeeping
+      val valid = res.validDataFiles.collect()
+        .sortBy(_.getAs[Int]("docIdx")).map(_.getString(0)).toSeq
+      Report(messages, valid, subValid, fileOrder)
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.hep._
@@ -12,8 +13,8 @@ import graft.hep._
   * (probed live: "[1, 2] is not of type 'object'", "There is no schema
   * defined for the 'X' data type." — int-like roots CRASH the reference
   * with a TypeError; here they get the type message, fail-closed);
-  * `unrepresentable` quarantines shapes outside the row model (never
-  * silently dropped). */
+  * `unrepresentable` names a shape outside the row model (such a file
+  * carries no data rows). */
 final case class ParsedFile(
     fname: String, size: Long,
     parseable: Boolean, parseError: Option[String],
@@ -35,19 +36,25 @@ final case class ParsedFile(
   * codec: no Catalyst expression can run a YAML parser. */
 object RawSubmission {
 
-  final case class Result(
-      messages: DataFrame, // (file, seq, message, level)
-      validDataFiles: Seq[String], // bare names, submission-doc order
-      subValid: Boolean, // print_valid_files' SUBMISSION/SINGLE_YAML entry
-      quarantined: Seq[(String, String)], // (fname, unrepresentable shape)
-      fileOrder: Seq[String] = Nil) // reference messages-dict insertion order
+  /** Whole-file read through the Hadoop FS API; `size` comes from the
+    * caller's listing or file status. */
+  private def readAll(fs: FileSystem, path: Path, size: Long): Array[Byte] = {
+    val in = fs.open(path)
+    try {
+      val buf = new Array[Byte](size.toInt)
+      in.readFully(0, buf); buf
+    } finally in.close()
+  }
 
-  /** Driver-side flat listing (name, size), sorted by name. */
-  private def listDir(spark: SparkSession, dir: String): Seq[(String, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).toSeq.filter(_.isFile)
-      .map(st => (st.getPath.getName, st.getLen)).sortBy(_._1)
+  /** The message for a submission-level YAML file that cannot be ingested:
+    * the loader text, or a loud fail-closed message for a shape outside the
+    * row model (the reference emits a schema message or crashes here,
+    * shape-dependent; never a silent pass). */
+  private def ingestFailure(e: Throwable): String = e match {
+    case e: PyYamlError =>
+      "There was a problem parsing the file:\n\t\t" +
+        e.rendered.replace("\n", "\n\t\t")
+    case e: UnrepresentableShape => s"Unrepresentable YAML shape: ${e.what}"
   }
 
   /** Executor-side read + parse of every non-submission file within the
@@ -79,13 +86,8 @@ object RawSubmission {
         if (fname == "submission.yaml" || size > sizeLimit)
           ParsedFile(fname, size, parseable = true, None, None, None, None)
         else {
-          val path = new org.apache.hadoop.fs.Path(dirStr, fname)
-          val fs = path.getFileSystem(conf)
-          val in = fs.open(path)
-          val bytes = try {
-            val buf = new Array[Byte](size.toInt)
-            in.readFully(0, buf); buf
-          } finally in.close()
+          val path = new Path(dirStr, fname)
+          val bytes = readAll(path.getFileSystem(conf), path, size)
           try {
             val doc = PyYamlParse.load(PyYamlParse.decode(bytes, fname), fname)
             val row = doc match {
@@ -124,31 +126,18 @@ object RawSubmission {
   /** Single-file submission (`hepdata-validate -f`, ref
     * full_submission_validator.py:116-142): one combined YAML stream,
     * optionally gzipped, logically split into submission + derived data
-    * files. Message attribution uses the file's own name (for .yaml.gz the
-    * reference unzips into a temp dir and strips it, leaving the .yaml
-    * basename). */
-  def validateFile(spark: SparkSession, path: String): Result = {
+    * files by [[FullSubmission.validateSingleYaml]]. Message attribution
+    * uses the file's own name (for .yaml.gz the reference unzips into a
+    * temp dir and strips it, leaving the .yaml basename). */
+  def validateFile(spark: SparkSession, path: String): FullSubmission.Report = {
     import spark.implicits._
-    def fail(file: String, message: String): Result =
-      Result(spark.createDataFrame(Seq((file, 0L, message, "error")))
-        .toDF("file", "seq", "message", "level"),
-        Nil, subValid = false, Nil, Seq(file))
-
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p) || !fs.getFileStatus(p).isFile)
-      return fail(path, s"File $path does not exist.")
-    val bytes = {
-      val in = fs.open(p)
-      try {
-        val size = fs.getFileStatus(p).getLen.toInt
-        val buf = new Array[Byte](size); in.readFully(0, buf); buf
-      } finally in.close()
-    }
+      return FullSubmission.failed(spark, path, s"File $path does not exist.")
+    val bytes = readAll(fs, p, fs.getFileStatus(p).getLen)
     val isGz = path.endsWith(".yaml.gz")
-    val attrName =
-      if (isGz) new org.apache.hadoop.fs.Path(path.dropRight(3)).getName
-      else path
+    val attrName = if (isGz) new Path(path.dropRight(3)).getName else path
     val raw =
       if (isGz) {
         try {
@@ -157,145 +146,72 @@ object RawSubmission {
           try gz.readAllBytes() finally gz.close()
         } catch {
           case e: java.io.IOException =>
-            return fail(path, s"Unable to extract file $path. Error was: ${e.getMessage}")
+            return FullSubmission.failed(spark, path,
+              s"Unable to extract file $path. Error was: ${e.getMessage}")
         }
       } else bytes
     val tables =
       try YamlIngest.splitSingleYaml(attrName, PyYamlParse.decode(raw, attrName))
       catch {
-        case e: PyYamlError =>
-          return fail(attrName,
-            "There was a problem parsing the file:\n\t\t" +
-              e.rendered.replace("\n", "\n\t\t"))
-        case e: UnrepresentableShape =>
-          // loud fail-closed (the reference emits a schema message or
-          // crashes here, shape-dependent); never a silent pass
-          return fail(attrName, s"Unrepresentable YAML shape: ${e.what}")
+        case e @ (_: PyYamlError | _: UnrepresentableShape) =>
+          return FullSubmission.failed(spark, attrName, ingestFailure(e))
       }
-    val docs = tables.docs.toDF("docIdx", "name", "resources")
-    // localCheckpoint: eager materialization with lineage cut — cleaned
-    // up by the ContextCleaner when the frame is collected and dropped
-    // (a plain persist leaks in long-lived sessions)
-    val messages = FullSubmission.validateSingleYaml(spark,
-      Seq(tables.sub).toDS().toDF(), attrName, docs,
-      tables.hepRows.toDF()).localCheckpoint()
-    // single-YAML mode: any message is doc-invalidating (parse errors are
-    // impossible for the derived files and the sweep is off)
-    val valid = messages.isEmpty
-    Result(messages, Nil, subValid = valid, Nil, Seq(attrName))
+    FullSubmission.validateSingleYaml(spark, Seq(tables.sub).toDS().toDF(),
+      attrName, tables.docs.toDF("docIdx", "name", "resources"),
+      tables.hepRows.toDF())
   }
 
-  /** Full raw-directory validation: list, parse submission.yaml
-    * driver-side (small by construction), fan file parsing out to
-    * executors, and run the FullSubmission orchestration. Message `file`
-    * values are directory-relative (callers prefix for display, like the
-    * reference's full paths). */
-  def validateDir(spark: SparkSession, dir: String,
-      sizeLimit: Long = FullSubmission.SizeLimit): Result = {
+  /** Raw-directory validation: list, parse submission.yaml driver-side
+    * (small by construction; the reference holds the doc list in memory
+    * too), fan file parsing out to executors, and hand the tables to
+    * [[FullSubmission.validate]]. The listing is driver-side metadata (the
+    * reference's os.listdir), sorted by name. Message `file` values are
+    * directory-relative (callers prefix for display, like the reference's
+    * full paths). */
+  def validateDir(spark: SparkSession, dir: String): FullSubmission.Report = {
     import spark.implicits._
-    def fail(file: String, message: String): Result =
-      Result(spark.createDataFrame(Seq((file, 0L, message, "error")))
-        .toDF("file", "seq", "message", "level"),
-        Nil, subValid = false, Nil, Seq(file))
-
-    val p = new org.apache.hadoop.fs.Path(dir)
+    val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p) || !fs.getFileStatus(p).isDirectory)
-      return fail(dir, s"Directory $dir does not exist.")
-    val listing = listDir(spark, dir)
-    if (!listing.exists(_._1 == "submission.yaml"))
-      return fail("submission.yaml", "No submission.yaml file found in submission.")
+      return FullSubmission.failed(spark, dir, s"Directory $dir does not exist.")
+    val listing = fs.listStatus(p).toSeq.filter(_.isFile)
+      .map(st => (st.getPath.getName, st.getLen)).sortBy(_._1)
+    val subSize = listing.collectFirst { case ("submission.yaml", n) => n }
+    if (subSize.isEmpty)
+      return FullSubmission.failed(spark, "submission.yaml",
+        "No submission.yaml file found in submission.")
 
-    // submission.yaml: driver-side parse (the reference holds the doc list
-    // in memory too; schemas cap realistic size)
-    val subPath = new org.apache.hadoop.fs.Path(dir, "submission.yaml")
-    val subBytes = {
-      val in = fs.open(subPath)
-      try {
-        val size = fs.getFileStatus(subPath).getLen.toInt
-        val buf = new Array[Byte](size); in.readFully(0, buf); buf
-      } finally in.close()
-    }
     val (sub, docsMeta) =
       try {
-        val parsed = PyYamlParse.loadAll(
-          PyYamlParse.decode(subBytes, "submission.yaml"), "submission.yaml")
+        val parsed = PyYamlParse.loadAll(PyYamlParse.decode(
+          readAll(fs, new Path(dir, "submission.yaml"), subSize.get),
+          "submission.yaml"), "submission.yaml")
         (SubFile("submission.yaml", parsed.map(YamlIngest.subDoc)),
           YamlIngest.docMeta(parsed))
       } catch {
-        case e: PyYamlError =>
-          return fail("submission.yaml",
-            "There was a problem parsing the file:\n\t\t" +
-              e.rendered.replace("\n", "\n\t\t"))
-        case e: UnrepresentableShape =>
-          return fail("submission.yaml",
-            s"Unrepresentable YAML shape: ${e.what}")
+        case e @ (_: PyYamlError | _: UnrepresentableShape) =>
+          return FullSubmission.failed(spark, "submission.yaml", ingestFailure(e))
       }
 
-    // reference short-circuit: invalid submission.yaml → its own messages
-    val subMsgs = SubmissionRules.violations(Seq(sub).toDS().toDF())
-    if (!subMsgs.isEmpty) {
-      val hdr = spark.createDataFrame(
-        Seq(("submission.yaml", -1L, "submission.yaml is invalid HEPData YAML.", "error")))
-        .toDF("file", "seq", "message", "level")
-      val messages = hdr.unionByName(subMsgs.select(
-          lit("submission.yaml").as("file"), col("seq").cast("long").as("seq"),
-          col("message"), col("level")))
-        .orderBy("seq")
-      return Result(messages, Nil, subValid = false, Nil, Seq("submission.yaml"))
-    }
-
-    val parsed = parsedFiles(spark, dir, listing, sizeLimit).persist()
-    try {
-      val files = parsed.toDF()
-        .select(col("fname"), col("size"), col("parseable"),
-          col("parseError").as("parseError"))
-      val hepRows = parsed.flatMap(_.hepRow.toSeq).toDF()
-      val rootVios = parsed
-        .flatMap(f => f.rootViolation.map(m => (f.fname, 0, m)).toSeq)
-        .toDF("file", "seq", "message")
-      val dv = HepDataRules.violations(hepRows)
-        .select(col("file"), col("seq").cast("int").as("seq"), col("message"))
-        .unionByName(rootVios)
-      val docs = docsMeta
-        .map(d => (d.docIdx, d.name, d.hasDataFile, d.dataFile, d.resources,
-          d.dataSchema.orNull))
-        .toDF("docIdx", "name", "hasDataFile", "dataFile", "resources",
-          "dataSchema")
-      val res = FullSubmission.checks(spark, "submission.yaml", docs, files,
-        dv, sizeLimit)
-      val keyed = res.messages.persist()
-      val messages = FullSubmission.ordered(keyed)
-      // materialize outputs while `parsed`/`keyed` are pinned
-      messages.persist()
-      messages.count()
-      val validNames = res.validDataFiles.collect().map(_.getString(0))
-      // submission-doc order, like the reference's valid_files bookkeeping
-      val inDocOrder = docsMeta.flatMap(d => Option(d.dataFile))
-        .filter(validNames.toSet)
-      // print_valid_files lists submission.yaml unless a resource check,
-      // a data_file '/' check, or schema dispatch failed — missing/
-      // oversized data files, parse errors and invalid data all `return`
-      // WITHOUT flipping is_valid_submission_doc in directory mode
-      // (ref: _check_doc, :271-347)
-      val firsts = keyed.groupBy(col("file"))
-        .agg(min(struct(col("k0"), col("k1"), col("k2"), col("k3"))).as("fk"),
-          sum(when(col("k1") === 0 ||
-              (col("k1") === 1 && (col("k2") === 0 || col("k2") === 3)), 1)
-            .otherwise(0)).as("invalidating"))
-        .collect()
-      val subListed = firsts.map(_.getAs[Long]("invalidating")).sum == 0
-      val fileOrder = firsts
-        .map(r => (r.getString(0), r.getStruct(1)))
-        .sortBy { case (f, k) =>
-          (k.getInt(0), k.getInt(1), k.getInt(2), k.getInt(3), f) }
-        .map(_._1).toSeq
-      keyed.unpersist()
-      // slim projection — never pull full HepRow payloads to the driver
-      val quarantined = parsed
-        .flatMap(f => f.unrepresentable.map(f.fname -> _).toSeq)
-        .collect().toSeq
-      Result(messages, inDocOrder, subValid = subListed, quarantined, fileOrder)
-    } finally parsed.unpersist()
+    // lazy local checkpoint: every file is read and parsed once, by the
+    // first job that needs it, and not at all when submission.yaml stops
+    // the run
+    val parsed = parsedFiles(spark, dir, listing).localCheckpoint(eager = false)
+    val files = parsed.toDF()
+      .select(col("fname"), col("size"), col("parseable"), col("parseError"))
+    val hepRows = parsed.flatMap(_.hepRow.toSeq).toDF()
+    val rootVios = parsed
+      .flatMap(f => f.rootViolation.map(m => (f.fname, 0, m)).toSeq)
+      .toDF("file", "seq", "message")
+    val dv = HepDataRules.violations(hepRows)
+      .select(col("file"), col("seq").cast("int").as("seq"), col("message"))
+      .unionByName(rootVios)
+    val docs = docsMeta
+      .map(d => (d.docIdx, d.name, d.hasDataFile, d.dataFile, d.resources,
+        d.dataSchema.orNull))
+      .toDF("docIdx", "name", "hasDataFile", "dataFile", "resources",
+        "dataSchema")
+    FullSubmission.validate(spark, Seq(sub).toDS().toDF(), "submission.yaml",
+      docs, files, dv)
   }
 }

@@ -34,7 +34,8 @@ object TextOps {
     * Computed through the one-pass codegen'd sketch.LangScores kernel (the
     * per-language `filter(t, isin(...))` spelling — kept below as
     * [[languageIdSpec]] — paid one interpreted CodegenFallback token pass
-    * per language); identical output, pinned by OpsSpec. */
+    * per language); identical output, asserted by OpsSpec's "kernel
+    * equivalence" tests. */
   def languageId(df: DataFrame, textCol: String): DataFrame =
     languageIdDim(df, textCol, StopwordSets)
 

@@ -31,30 +31,39 @@ object HepGen {
   // it through the ExpressionEncoder per row — ~0.3 s of every
   // hep_scaled_50k run and the constant factor of every ScaleProbe sweep.
   // This builds the identical rows as one codegen'd projection
-  // (HepGenSpec pins rowsSpec == rows field-for-field at 50k).
+  // (HepGenSpec pins rows == rowsSpec: the same schema and rows).
+
+  /** Marks `c` nullable: the output schema is exactly the HepRow encoder's,
+    * where every String, Seq and nested case-class value may be null. */
+  private def nullable(c: Column): Column = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    ColumnBridge.column(org.apache.spark.sql.catalyst.expressions.KnownNullable(
+      ColumnBridge.expression(c)))
+  }
 
   private val nullStr = lit(null).cast("string")
   private val nullDouble = lit(null).cast("double")
-  private def emptyStrArr: Column = array().cast("array<string>")
+  private def emptyStrArr: Column = nullable(array().cast("array<string>"))
 
   /** HepHeader() default */
-  private def headerCol: Column = struct(
+  private def headerCol: Column = nullable(struct(
     lit(true).as("isObj"), nullStr.as("repr"),
     lit(true).as("hasName"), nullStr.as("nameRepr"),
     lit(false).as("hasUnits"), nullStr.as("unitsRepr"),
-    emptyStrArr.as("extraKeys"))
+    emptyStrArr.as("extraKeys")))
 
   private def errCol(hasSym: Column, symRaw: Column, hasAsym: Column,
       plusRaw: Column, minusRaw: Column, labelRaw: Column,
-      instanceRepr: Column): Column = struct(
-    hasSym.as("hasSym"), symRaw.as("symRaw"),
-    hasAsym.as("hasAsym"), plusRaw.as("plusRaw"), minusRaw.as("minusRaw"),
-    lit(true).as("hasLabel"), labelRaw.as("labelRaw"),
+      instanceRepr: Column): Column = nullable(struct(
+    hasSym.as("hasSym"), nullable(symRaw).as("symRaw"),
+    hasAsym.as("hasAsym"), nullable(plusRaw).as("plusRaw"),
+    nullable(minusRaw).as("minusRaw"),
+    lit(true).as("hasLabel"), nullable(labelRaw).as("labelRaw"),
     lit(true).as("labelIsString"), emptyStrArr.as("extraKeys"),
     lit(true).as("hasPlus"), lit(true).as("hasMinus"),
-    emptyStrArr.as("asymExtraKeys"), instanceRepr.as("instanceRepr"),
+    emptyStrArr.as("asymExtraKeys"), nullable(instanceRepr).as("instanceRepr"),
     nullStr.as("symRepr"), nullStr.as("asymRepr"),
-    nullStr.as("plusRepr"), nullStr.as("minusRepr"))
+    nullStr.as("plusRepr"), nullStr.as("minusRepr")))
 
   private def symCol(v: Column, label: String): Column =
     errCol(lit(true), v, lit(false), nullStr, nullStr, lit(label), nullStr)
@@ -62,20 +71,20 @@ object HepGen {
   private def asymCol(plus: Column, minus: Column, label: String): Column =
     errCol(lit(false), nullStr, lit(true), plus, minus, lit(label), nullStr)
 
-  private def pointCol(raw: Column): Column = struct(
-    lit(true).as("hasValue"), raw.as("valueRaw"),
+  private def pointCol(raw: Column): Column = nullable(struct(
+    lit(true).as("hasValue"), nullable(raw).as("valueRaw"),
     lit(false).as("valueIsString"),
     lit(false).as("hasLow"), nullStr.as("lowRaw"),
     lit(false).as("lowIsNum"), nullDouble.as("lowNum"),
     lit(false).as("hasHigh"), nullStr.as("highRaw"),
     lit(false).as("highIsNum"), nullDouble.as("highNum"),
-    concat(lit("{'value': "), raw, lit("}")).as("instanceRepr"),
-    emptyStrArr.as("extraKeys"))
+    nullable(concat(lit("{'value': "), raw, lit("}"))).as("instanceRepr"),
+    emptyStrArr.as("extraKeys")))
 
-  private def dvalCol(v: Column, errs: Column): Column = struct(
-    lit(true).as("hasValue"), v.as("valueRaw"),
-    lit(true).as("hasErrors"), errs.as("errors"),
-    emptyStrArr.as("extraKeys"))
+  private def dvalCol(v: Column, errs: Column): Column = nullable(struct(
+    lit(true).as("hasValue"), nullable(v).as("valueRaw"),
+    lit(true).as("hasErrors"), nullable(errs).as("errors"),
+    emptyStrArr.as("extraKeys")))
 
   def rows(spark: SparkSession, n: Long): DataFrame = {
     import Residues._
@@ -102,25 +111,25 @@ object HepGen {
         array(pointCol(concat(lit("7"), v))))
       .otherwise(array(pointCol(concat(lit("7"), v)),
         pointCol(concat(lit("8"), v))))
-    val indepVar = struct(
-      lit("SQRT(S)").as("headerName"), lit(true).as("hasValues"),
-      indepVals.as("values"), lit(true).as("hasHeader"),
-      emptyStrArr.as("extraKeys"), headerCol.as("header"))
-    val depVar = struct(
-      lit("SIG").as("headerName"), lit(true).as("hasHeader"),
+    val indepVar = nullable(struct(
+      nullable(lit("SQRT(S)")).as("headerName"), lit(true).as("hasValues"),
+      nullable(indepVals).as("values"), lit(true).as("hasHeader"),
+      emptyStrArr.as("extraKeys"), headerCol.as("header")))
+    val depVar = nullable(struct(
+      nullable(lit("SIG")).as("headerName"), lit(true).as("hasHeader"),
       lit(true).as("hasValues"),
-      array(dvalCol(concat(lit("6."), v), errs0),
-        dvalCol(concat(lit("5."), v), errs1)).as("values"),
+      nullable(array(dvalCol(concat(lit("6."), v), errs0),
+        dvalCol(concat(lit("5."), v), errs1))).as("values"),
       emptyStrArr.as("extraKeys"), headerCol.as("header"),
       lit(false).as("hasQualifiers"), nullStr.as("qualifiersRepr"),
-      array().cast(org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.Encoders.product[HepQualifier].schema))
-        .as("qualifiers"))
+      nullable(array().cast(org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.Encoders.product[HepQualifier].schema)))
+        .as("qualifiers")))
     spark.range(n).select(
-      concat(lit("gen_"), id.cast("string"), lit(".yaml")).as("file"),
+      nullable(concat(lit("gen_"), id.cast("string"), lit(".yaml"))).as("file"),
       lit(false).as("emptyDoc"),
-      lit(true).as("hasIndep"), array(indepVar).as("indep"),
-      lit(true).as("hasDep"), array(depVar).as("dep"),
+      lit(true).as("hasIndep"), nullable(array(indepVar)).as("indep"),
+      lit(true).as("hasDep"), nullable(array(depVar)).as("dep"),
       nullStr.as("indepBadRepr"), nullStr.as("depBadRepr"))
   }
 

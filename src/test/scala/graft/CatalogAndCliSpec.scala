@@ -71,4 +71,18 @@ class CatalogAndCliSpec extends AnyFunSuite {
     assert(text.contains(s"ERROR: $pagesPath is invalid."))
     assert(text.contains("None is not of type 'string' in 'url'"))
   }
+
+  test("CLI rejects unknown or misaligned flags with usage and exit 2") {
+    Seq(Array("--page", "/data"), Array("--pages"), Array("pages", "/data"),
+        Array("--dir", "/data", "--bogus", "x")).foreach { args =>
+      val out = new java.io.ByteArrayOutputStream()
+      val err = new java.io.ByteArrayOutputStream()
+      val code = Console.withOut(new java.io.PrintStream(out)) {
+        Console.withErr(new java.io.PrintStream(err)) { Cli.run(args) }
+      }
+      assert(code === 2, args.mkString(" "))
+      assert(out.size === 0, args.mkString(" "))
+      assert(err.toString("UTF-8").trim === Cli.Usage)
+    }
+  }
 }

@@ -46,9 +46,9 @@ class EndToEndSubmissionSpec extends AnyFunSuite {
     val dataViolations = HepDataRules.violations(hepRows.toDS().toDF())
     assert(dataViolations.count() === 0)
     // orchestration: existence, sizes, sweep — all clean
-    val out = FullSubmission.validateAll(spark, Seq(subFile).toDS().toDF(),
+    val out = FullSubmission.validate(spark, Seq(subFile).toDS().toDF(),
       "submission.yaml", docsDf, filesDf,
-      dataViolations.select(col("file"), col("seq"), col("message")))
+      dataViolations.select(col("file"), col("seq"), col("message"))).messages
     assert(out.count() === 0)
     val valid = FullSubmission.checks(spark, "submission.yaml", docsDf, filesDf,
       dataViolations.select(col("file"), col("seq"), col("message")))
@@ -61,8 +61,8 @@ class EndToEndSubmissionSpec extends AnyFunSuite {
       HepFixtures.zeroUncertainty.copy(file = "data5.yaml"))
     val dv = HepDataRules.violations(broken.toDS().toDF())
       .select(col("file"), col("seq"), col("message"))
-    val out = FullSubmission.validateAll(spark, Seq(subFile).toDS().toDF(),
-      "submission.yaml", docsDf, filesDf, dv)
+    val out = FullSubmission.validate(spark, Seq(subFile).toDS().toDF(),
+      "submission.yaml", docsDf, filesDf, dv).messages
       .collect().map(r => r.getAs[String]("file") -> r.getAs[String]("message"))
     assert(out.length === 2)
     assert(out(0) === ("data5.yaml" -> "data5.yaml is invalid HEPData YAML."))

@@ -59,8 +59,8 @@ class FullSubmissionConformanceSpec extends AnyFunSuite {
       }
       nMsgs += expected.valuesIterator.map(_.size).sum
 
-      val got = FullSubmission.validateAll(spark, Seq(sub).toDS().toDF(),
-          "submission.yaml", docs, files, dv)
+      val got = FullSubmission.validate(spark, Seq(sub).toDS().toDF(),
+          "submission.yaml", docs, files, dv).messages
         .orderBy("file", "seq").collect()
         .map(r => (r.getAs[String]("file"),
           (r.getAs[String]("level"), r.getAs[String]("message"))))

@@ -252,8 +252,8 @@ class FullSubmissionSpec extends AnyFunSuite {
     val (docs, files, dv) = fixture()
     def run(docsIn: org.apache.spark.sql.DataFrame,
         dvIn: org.apache.spark.sql.DataFrame) =
-      FullSubmission.validateAll(spark, Seq(SubFixtures.validRelated).toDS().toDF(),
-          "submission.yaml", docsIn, files, dvIn)
+      FullSubmission.validate(spark, Seq(SubFixtures.validRelated).toDS().toDF(),
+          "submission.yaml", docsIn, files, dvIn).messages
         .collect().map(r => (r.getAs[String]("file"), r.getAs[Long]("seq"),
           r.getAs[String]("message"))).toSeq
     val base = run(docs, dv)
@@ -281,9 +281,9 @@ class FullSubmissionSpec extends AnyFunSuite {
       lit("data9.yaml").as("file"), col("id").cast("int").as("seq"),
       concat(lit("Uncertainties should not all be zero in "),
         lpad(col("id").cast("string"), 7, "0")).as("message"))
-    val out = FullSubmission.validateAll(spark,
+    val out = FullSubmission.validate(spark,
       Seq(SubFixtures.validRelated).toDS().toDF(),
-      "submission.yaml", docs, files, big.repartition(8))
+      "submission.yaml", docs, files, big.repartition(8)).messages
     val got = out.where(col("file") === "data9.yaml")
       .select("seq", "message").collect()
     // header + n propagated messages, seq consecutive, messages sorted
@@ -298,9 +298,9 @@ class FullSubmissionSpec extends AnyFunSuite {
   test("short-circuit: invalid submission.yaml returns only its messages (:180-188)") {
     import spark.implicits._
     val (docs, files, dv) = fixture()
-    val out = FullSubmission.validateAll(spark,
+    val out = FullSubmission.validate(spark,
       Seq(SubFixtures.invalidDuplicates).toDS().toDF(),
-      "submission.yaml", docs, files, dv)
+      "submission.yaml", docs, files, dv).messages
       .collect().map(_.getAs[String]("message")).toSeq
     assert(out === Seq(
       "submission.yaml is invalid HEPData YAML.",

@@ -40,7 +40,7 @@ class HepGenSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val g1 = HepGen.rows(spark, 5000)
     val g2 = HepGen.rowsSpec(spark, 5000)
-    assert(g1.schema.fieldNames.sameElements(g2.schema.fieldNames))
+    assert(g1.schema === g2.schema)
     val j1 = g1.select(to_json(struct(g1.columns.map(col): _*)))
       .collect().map(_.getString(0)).sorted
     val j2 = g2.select(to_json(struct(g2.columns.map(col): _*)))

@@ -393,4 +393,95 @@ class OpsSpec extends AnyFunSuite {
     assert(rs.map(r => (r.id, r.media.toSeq)).toSet ===
       rs2.map(r => (r.id, r.media.toSeq)).toSet)
   }
+
+  // ---- each native kernel against its Column formulation ---------------
+  // Inputs: the sf0.01 tables next to `sf` (TESTDATA.md) plus an edge corpus
+  // of empty, whitespace-only, control, combining, non-BMP and 10 KB text.
+
+  lazy val sf01 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+  lazy val docs01 = spark.read.parquet(s"$sf01/documents.parquet")
+    .select(col("doc_id"), col("text"))
+  lazy val edgeTexts = {
+    import spark.implicits._
+    Seq("", " ", "  ", "\ta b", "a b ", " a\tb\nc ", "a", "123abc!?",
+      "\u0127\u0138\u03bb \u03a9\u03bc", "e\u0301col\u00e9", "\u00a0nbsp",
+      "\u65e5\u672c\u8a9e \u30c6\u30b9\u30c8", "a\u000bb\fc\rd",
+      "mixed \u5b57 x9 -- \ud83d\ude00 emoji", "\ud83d\ude00\ud83d\ude01",
+      "UPPER lower MiXeD", "\u03a3\u038a\u03a3\u03a5\u03a6\u039f\u03a3",
+      "\u0130stanbul", "\u1e9eharp", "\u0000\u0001", "x" * 10000)
+      .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+  }
+
+  /** Same columns and the same multiset of rows. */
+  def assertSameRows(a: org.apache.spark.sql.DataFrame,
+      b: org.apache.spark.sql.DataFrame): Unit = {
+    assert(a.columns.toSeq === b.columns.toSeq)
+    assert(a.count() > 0)
+    assert(a.exceptAll(b).count() === 0L)
+    assert(b.exceptAll(a).count() === 0L)
+  }
+
+  def cosineMismatches(pairs: org.apache.spark.sql.DataFrame): Long = {
+    assert(pairs.count() > 0)
+    pairs.where(!(Similarity.cosineSpec(col("qv"), col("cv")) <=>
+      Similarity.cosine(col("qv"), col("cv")))).count()
+  }
+
+  test("kernel equivalence: CosineSim == cosineSpec on floats, doubles, nulls and ragged pairs") {
+    import spark.implicits._
+    val e = spark.read.parquet(s"$sf01/embeddings.parquet")
+    // float x float: 50 queries x the whole corpus
+    val q = e.where(col("vec_id") < 50).select(col("embedding").as("qv"))
+    assert(cosineMismatches(
+      e.select(col("embedding").as("cv")).crossJoin(broadcast(q))) === 0L)
+    // double x double, with planted +0.01 near-copies (dedup_embedding shape)
+    val d = e.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val all = d.unionByName(d.where(col("vec_id") < 50)
+      .select((col("vec_id") + 100000).as("vec_id"),
+        transform(col("v"), x => x + lit(0.01)).as("v")))
+    val qd = all.where(col("vec_id") < 60).select(col("v").as("qv"))
+    assert(cosineMismatches(
+      all.select(col("v").as("cv")).crossJoin(broadcast(qd))) === 0L)
+    // null members and length mismatches
+    assert(cosineMismatches(Seq(
+      (Seq[java.lang.Double](1.0, 2.0), Seq[java.lang.Double](1.0, 2.0, 3.0)),
+      (Seq[java.lang.Double](1.0, null), Seq[java.lang.Double](1.0, 2.0)))
+      .toDF("qv", "cv")) === 0L)
+  }
+
+  test("kernel equivalence: CosineSim and cosineSpec both throw on a zero-norm vector") {
+    import spark.implicits._
+    val zero = Seq((Seq(0.0, 0.0), Seq(1.0, 2.0))).toDF("qv", "cv")
+    def divideByZero(c: org.apache.spark.sql.Column): Boolean =
+      try { zero.select(c).collect(); false } catch {
+        case _: ArithmeticException => true
+        case e: org.apache.spark.SparkException
+          if e.getMessage.contains("DIVIDE_BY_ZERO") => true
+      }
+    assert(divideByZero(Similarity.cosineSpec(col("qv"), col("cv"))))
+    assert(divideByZero(Similarity.cosine(col("qv"), col("cv"))))
+  }
+
+  test("kernel equivalence: LangScores/LangPred == per-language filters and the argmax chain") {
+    for (d <- Seq(docs01, edgeTexts)) {
+      assertSameRows(TextOps.languageId(d, "text"),
+        TextOps.languageIdSpec(d, "text"))
+      assertSameRows(TextOps.languageIdDim(d, "text"),
+        TextOps.languageIdDimSpec(d, "text"))
+    }
+  }
+
+  test("kernel equivalence: WsTokenCount/BpeishTokenCount/NormalizedMd5/Sha256Hex == Column formulations") {
+    val sha = org.apache.spark.sql.graft.ColumnBridge.column(
+      graft.sketch.Sha256Hex(org.apache.spark.sql.graft.ColumnBridge
+        .expression(col("text").cast("binary"))))
+    for (d <- Seq(docs01, edgeTexts)) {
+      assertSameRows(TextOps.tokenCounts(d, "text"),
+        TextOps.tokenCountsSpec(d, "text"))
+      assertSameRows(TextOps.fingerprint(d, "text"),
+        TextOps.fingerprintSpec(d, "text"))
+      assert(d.where(!(sha <=> sha2(col("text").cast("binary"), 256)))
+        .count() === 0L)
+    }
+  }
 }

@@ -47,7 +47,7 @@ class SingleYamlConformanceSpec extends AnyFunSuite {
       nMsgs += expected.valuesIterator.map(_.size).sum
       val got = FullSubmission.validateSingleYaml(spark,
           Seq(sub).toDS().toDF(), name, docs, hepRows.toDS().toDF())
-        .orderBy("seq").collect()
+        .messages.orderBy("seq").collect()
         .map(r => (r.getAs[String]("file"),
           (r.getAs[String]("level"), r.getAs[String]("message"))))
         .groupBy(_._1).view.mapValues(_.map(_._2).toList).toMap

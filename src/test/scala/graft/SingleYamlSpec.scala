@@ -33,6 +33,7 @@ class SingleYamlSpec extends AnyFunSuite {
       Seq(SubFixtures.validRelated.copy(file = path)).toDS().toDF(),
       path, docsDf(Seq("Table 1", "Table 2")),
       Seq(validRow("Table_1.yaml"), validRow("Table_2.yaml")).toDS().toDF())
+      .messages
     assert(out.isEmpty, out.collect().mkString("\n"))
   }
 
@@ -43,6 +44,7 @@ class SingleYamlSpec extends AnyFunSuite {
       Seq(SubFixtures.validRelated.copy(file = path)).toDS().toDF(),
       path, docsDf(Seq("a/b c")),
       Seq(validRow("a-b_c.yaml")).toDS().toDF())
+      .messages
     assert(out.isEmpty, out.collect().mkString("\n"))
   }
 
@@ -60,7 +62,7 @@ class SingleYamlSpec extends AnyFunSuite {
       Seq(SubFixtures.validRelated.copy(file = invalidPath)).toDS().toDF(),
       invalidPath, docsDf(Seq("Table 1", "Table 2")),
       Seq(badRow, validRow("Table_2.yaml")).toDS().toDF())
-      .collect().map(r => (r.getAs[String]("file"), r.getAs[String]("message")))
+      .messages.collect().map(r => (r.getAs[String]("file"), r.getAs[String]("message")))
     assert(out.length === 2)
     // everything attributes to the submission path (ref :327 user_data_file_path)
     assert(out.forall(_._1 == invalidPath))
