@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.engine.{DriftPass, PageValidator}
@@ -84,8 +84,10 @@ object Cli {
         return 2
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    // don't tear down a session we didn't create (in-process callers/tests)
-    val ownSession = SparkSession.getActiveSession.isEmpty
+    // don't tear down a session we didn't create (in-process callers/tests,
+    // on any thread: the active session is thread-local, the default is not)
+    val ownSession = SparkSession.getActiveSession.isEmpty &&
+      SparkSession.getDefaultSession.isEmpty
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-validate")
@@ -118,42 +120,52 @@ object Cli {
         opts.get("pages").fold(target.split(":")(0).toLong)(_ => 0L))
     }
 
-    val res = opts.get("spec") match {
-      case Some(path) =>
-        val spec = SpecJson.load(path)
-        val violations = graft.compile.ConstraintCompiler.violations(spec, pages)
-        val verdicts = graft.engine.Passes.verdicts(violations,
-          spec.partitionColumn, pages.select(col(spec.partitionColumn)))
-        (violations, verdicts)
-      case None =>
-        val r = PageValidator.validate(spark, pages,
-          PagesGen.langDim(spark), expected)
-        (r.violations, r.verdicts)
-    }
-    val (violations, verdicts) = res
-    violations.persist()
-
-    val verdictRows = verdicts.orderBy("part_id").collect()
-    val allValid = verdictRows.forall(_.getAs[Boolean]("pass"))
     val name = opts.getOrElse("pages", s"synthetic:$target")
+    // violations of the rows validated in THIS run (none on a no-op resume)
+    var validated: Option[DataFrame] = None
+    def verdictsOf(df: DataFrame): DataFrame = {
+      val (violations, verdicts) = opts.get("spec") match {
+        case Some(path) =>
+          val spec = SpecJson.load(path)
+          val violations = graft.compile.ConstraintCompiler.violations(spec, df)
+          (violations, graft.engine.Passes.verdicts(violations,
+            spec.partitionColumn, df.select(col(spec.partitionColumn))))
+        case None =>
+          val r = PageValidator.validate(spark, df,
+            PagesGen.langDim(spark), expected)
+          (r.violations, r.verdicts)
+      }
+      validated = Some(violations.persist())
+      verdicts
+    }
+    // (part_id, n_violations); with --manifest, read back from the manifest's
+    // done rows at the snapshot, so a rerun or resume prints the same verdicts
+    val verdicts = opts.get("manifest") match {
+      case Some(mPath) =>
+        val snap = opts.getOrElse("snapshot", "1").toLong
+        Manifest.runIncremental(spark, mPath, pages, snap,
+          s"cli run target=$name")(verdictsOf)
+        Manifest.read(spark, mPath)
+          .where(col("status") === "done" && col("snapshot_id") === snap)
+          .select(col("part_id"), col("violations"))
+      case None =>
+        verdictsOf(pages).select(col("part_id").cast("int"), col("n_violations"))
+    }
+    val verdictRows = verdicts.orderBy("part_id").collect()
+      .map(r => (r.getInt(0), r.getLong(1)))
+    val allValid = verdictRows.forall(_._2 == 0L)
     if (allValid) println(s"$name is valid.")
     else println(s"ERROR: $name is invalid.")
-    verdictRows.foreach { r =>
-      val p = r.getInt(0); val n = r.getAs[Long]("n_violations")
-      val status = if (r.getAs[Boolean]("pass")) "valid" else s"invalid ($n violations)"
+    verdictRows.foreach { case (p, n) =>
+      val status = if (n == 0L) "valid" else s"invalid ($n violations)"
       println(s"\t partition $p is $status")
     }
     val maxShow = opts.getOrElse("max-violations", "20").toInt
-    violations.orderBy("part_id", "rule_seq").limit(maxShow).collect()
+    validated.foreach(_.orderBy("part_id", "rule_seq").limit(maxShow).collect()
       .foreach { r =>
         println(s"\t ${r.getAs[String]("level")} - ${r.getAs[String]("message")}")
-      }
-
+      })
     opts.get("manifest").foreach { mPath =>
-      val snap = opts.getOrElse("snapshot", "1").toLong
-      Manifest.record(spark, mPath, verdicts,
-        pages.groupBy(col("part_id")).agg(count(lit(1)).as("docs")),
-        snap, s"cli run target=$name")
       println(s"\t manifest: ${Manifest.read(spark, mPath).count()} rows at $mPath")
     }
 
@@ -165,7 +177,7 @@ object Cli {
       }
     }
 
-    violations.unpersist()
+    validated.foreach(_.unpersist())
     if (ownSession) spark.stop()
     if (allValid) 0 else 1
   }

@@ -12,14 +12,13 @@ import graft.hep._
   * reference's message for non-mapping roots / unregistered custom types
   * (probed live: "[1, 2] is not of type 'object'", "There is no schema
   * defined for the 'X' data type." — int-like roots CRASH the reference
-  * with a TypeError; here they get the type message, fail-closed);
-  * `unrepresentable` names a shape outside the row model (such a file
-  * carries no data rows). */
+  * with a TypeError; here they get the type message, fail-closed) and for
+  * a shape outside the row model ("Unrepresentable YAML shape: ..."; such
+  * a file carries no data rows). */
 final case class ParsedFile(
     fname: String, size: Long,
     parseable: Boolean, parseError: Option[String],
-    hepRow: Option[HepRow], unrepresentable: Option[String],
-    rootViolation: Option[String] = None)
+    hepRow: Option[HepRow], rootViolation: Option[String] = None)
 
 /** Raw-directory ingestion: actual YAML bytes → the engine's row model,
   * then the existing FullSubmission orchestration — the production path
@@ -84,7 +83,7 @@ object RawSubmission {
       }
       entries.map { case (fname, size) =>
         if (fname == "submission.yaml" || size > sizeLimit)
-          ParsedFile(fname, size, parseable = true, None, None, None, None)
+          ParsedFile(fname, size, parseable = true, None, None)
         else {
           val path = new Path(dirStr, fname)
           val bytes = readAll(path.getFileSystem(conf), path, size)
@@ -108,15 +107,14 @@ object RawSubmission {
               case other =>
                 Some(s"${other.pyRepr} is not of type 'object'")
             }
-            ParsedFile(fname, size, parseable = true, None, row,
-              None, rootVio)
+            ParsedFile(fname, size, parseable = true, None, row, rootVio)
           } catch {
             case e: PyYamlError =>
               ParsedFile(fname, size, parseable = false,
-                Some(e.rendered.replace("\n", "\n\t\t")), None, None, None)
+                Some(e.rendered.replace("\n", "\n\t\t")), None)
             case e: UnrepresentableShape =>
               ParsedFile(fname, size, parseable = true, None, None,
-                Some(e.what), None)
+                Some(ingestFailure(e)))
           }
         }
       }

@@ -207,6 +207,11 @@ object Similarity {
       fitSample(corpus, corpusId, corpusVec, fitCap)
         .select(col("v"), xxhash64(to_json(col("v"))).as("sh"))
         .collect().map(r => (r.getLong(1), r.getSeq[Double](0).toArray))
+    // every fit vector must share one length: a ragged fit set has no
+    // well-defined nearest cell, so fail loudly instead of truncating
+    val dim = if (fitLocal.isEmpty) 0 else fitLocal(0)._2.length
+    fitLocal.foreach { case (_, x) => require(x.length == dim,
+      s"ragged fit vectors: lengths $dim and ${x.length}") }
     val sampleN = if (spreadSeeds) math.max(nCells, 512) else nCells
     val sample: Array[Array[Double]] =
       fitLocal.sortBy(_._1).take(sampleN).map(_._2)
@@ -224,7 +229,6 @@ object Similarity {
         val n = math.sqrt(a.map(x => x * x).sum)
         if (n == 0) a else a.map(_ / n)
       }.toArray
-      val dim = if (fitLocal.isEmpty) 0 else fitLocal(0)._2.length
       val sums = Array.fill(cents.length)(new Array[Double](dim))
       val cnts = new Array[Long](cents.length)
       fitLocal.foreach { case (_, x) =>
@@ -233,17 +237,15 @@ object Similarity {
         var c = 0
         while (c < cents.length) {
           val ct = cents(c)
-          val m = math.min(x.length, ct.length)
           var acc = 0.0
           var j = 0
-          while (j < m) { acc += x(j) * ct(j); j += 1 }
+          while (j < dim) { acc += x(j) * ct(j); j += 1 }
           if (acc > bestScore) { bestScore = acc; bestCell = c }
           c += 1
         }
         val s = sums(bestCell)
-        val m = math.min(x.length, dim)
         var j = 0
-        while (j < m) { s(j) += x(j); j += 1 }
+        while (j < dim) { s(j) += x(j); j += 1 }
         cnts(bestCell) += 1
       }
       centroids = centroids.zipWithIndex.map { case (old, c) =>

@@ -1,5 +1,6 @@
 package graft.report
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,8 +11,8 @@ import org.apache.spark.sql.functions._
   * Layout: `<root>/snapshot=<id>/part-*.parquet`. `snapshot` is a real
   * partition column, so `readUpTo`/`readSnapshot` prune at the directory
   * level — a 10^12-row table scan of one snapshot touches only that
-  * snapshot's files. Incremental validation = [[unprocessed]] (snapshot ids
-  * absent from the manifest) → validate → [[Manifest.record]].
+  * snapshot's files. Incremental validation = [[Manifest.runIncremental]]
+  * per snapshot.
   */
 final class SnapshotCatalog(spark: SparkSession, root: String) {
 
@@ -20,11 +21,12 @@ final class SnapshotCatalog(spark: SparkSession, root: String) {
       .write.mode(SaveMode.Append).partitionBy("snapshot").parquet(root)
 
   def snapshots(): Seq[Long] = {
-    val d = new java.io.File(root)
-    if (!d.exists()) Seq.empty
-    else d.listFiles().toSeq
-      .filter(f => f.isDirectory && f.getName.startsWith("snapshot="))
-      .map(_.getName.stripPrefix("snapshot=").toLong).sorted
+    val p = new Path(root)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("snapshot="))
+      .map(_.getPath.getName.stripPrefix("snapshot=").toLong).sorted
   }
 
   def readSnapshot(snapshotId: Long): DataFrame =
@@ -33,27 +35,14 @@ final class SnapshotCatalog(spark: SparkSession, root: String) {
   def readUpTo(snapshotId: Long): DataFrame =
     spark.read.parquet(root).where(col("snapshot") <= snapshotId)
 
-  /** Snapshot ids not yet recorded as done in the manifest. */
-  def unprocessed(manifest: DataFrame): Seq[Long] = {
-    val done = manifest.where(col("status") === "done")
-      .select(col("snapshot_id")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    snapshots().filterNot(done)
-  }
-
-  /** Validate every unprocessed snapshot with `process` (slice → verdicts)
-    * and record it; returns processed snapshot ids. Re-running after a crash
-    * resumes exactly at the first unrecorded snapshot. */
+  /** Validate every snapshot with `process` (slice → verdicts) through
+    * [[Manifest.runIncremental]], one call per snapshot; returns the
+    * snapshot ids that had pending partitions. Re-running after a crash
+    * resumes exactly at the first partition not recorded at its snapshot. */
   def runIncremental(manifestPath: String, lineage: String)(
-      process: DataFrame => DataFrame): Seq[Long] = {
-    val todo = unprocessed(Manifest.read(spark, manifestPath))
-    todo.foreach { snap =>
-      val slice = readSnapshot(snap)
-      val verdicts = process(slice)
-      val docs = slice.groupBy(col("part_id")).agg(count(lit(1)).as("docs"))
-      Manifest.record(spark, manifestPath, verdicts, docs, snap,
-        s"$lineage snapshot=$snap")
+      process: DataFrame => DataFrame): Seq[Long] =
+    snapshots().filter { snap =>
+      Manifest.runIncremental(spark, manifestPath, readSnapshot(snap), snap,
+        s"$lineage snapshot=$snap")(process).nonEmpty
     }
-    todo
-  }
 }

@@ -199,9 +199,12 @@ object StreamingValidator {
       .start()
   }
 
-  /** foreachBatch bridge: every micro-batch runs the BATCH validator and
-    * appends verdict rows to the manifest — checkpointed, so a restarted
-    * stream resumes from the last committed batch (north-star resume). */
+  /** foreachBatch bridge: every micro-batch runs the BATCH validator
+    * through [[graft.report.Manifest.runIncremental]], checkpointed. A batch
+    * replayed after a crash between the manifest write and the checkpoint
+    * commit finds its partitions done and appends nothing; so the stream
+    * must deliver all of a partition's rows for one snapshot in one batch,
+    * or move to a new `snapshotId`. */
   def runIncremental(
       spark: SparkSession,
       stream: DataFrame,
@@ -209,20 +212,17 @@ object StreamingValidator {
       manifestPath: String,
       checkpointDir: String,
       snapshotId: Long): org.apache.spark.sql.streaming.StreamingQuery = {
+    val p = spec.partitionColumn
     stream.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val violations = ConstraintCompiler.violations(spec, batch)
-        val verdicts = graft.engine.Passes.verdicts(
-          violations, spec.partitionColumn,
-          batch.select(col(spec.partitionColumn)))
-        val docs = batch.groupBy(col(spec.partitionColumn))
-          .agg(count(lit(1)).as("docs"))
-        graft.report.Manifest.record(spark, manifestPath,
-          verdicts.withColumnRenamed(spec.partitionColumn, "part_id"),
-          docs.withColumnRenamed(spec.partitionColumn, "part_id"),
-          snapshotId, s"stream batch=$batchId")
+        graft.report.Manifest.runIncremental(spark, manifestPath,
+          batch.withColumn("part_id", col(p)), snapshotId,
+          s"stream batch=$batchId") { slice =>
+          graft.engine.Passes.verdicts(ConstraintCompiler.violations(spec, slice),
+            p, slice.select(col(p))).withColumnRenamed(p, "part_id")
+        }
         ()
       }
       .start()

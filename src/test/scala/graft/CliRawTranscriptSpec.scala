@@ -142,4 +142,31 @@ class CliRawTranscriptSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("a data file whose YAML shape is outside the row model is listed invalid, with its message") {
+    withRoot { root =>
+      val dir = root.resolve("unrepresentable")
+      Files.createDirectory(dir)
+      def table(n: Int) =
+        s"data_file: data$n.yaml\ndescription: d\nkeywords:\n" +
+          s"- name: reactions\n  values:\n  - P P --> X\nname: Table $n\n"
+      Files.write(dir.resolve("submission.yaml"),
+        (table(1) + "---\n" + table(2)).getBytes("UTF-8"))
+      Files.write(dir.resolve("data1.yaml"),
+        ("dependent_variables:\n- header:\n    name: Y\n  values:\n" +
+          "  - errors:\n    - symerror: 0.1\n    value: 6.7\n" +
+          "independent_variables:\n- header:\n    name: X\n  values:\n" +
+          "  - value: 7000\n").getBytes("UTF-8"))
+      Files.write(dir.resolve("data2.yaml"),
+        "dependent_variables: []\nindependent_variables: [5]\n".getBytes("UTF-8"))
+      val (lines, exit) = Cli.rawTranscript(spark, "dir", dir.toString)
+      assert(exit === 1)
+      assert(lines === Seq(
+        s"ERROR: $dir is invalid.",
+        s"\t $dir/submission.yaml is valid HEPData submission YAML.",
+        s"\t $dir/data1.yaml is valid HEPData data YAML.",
+        "\t error - data2.yaml is invalid HEPData YAML.",
+        "\t error - Unrepresentable YAML shape: independent variable: 5"))
+    }
+  }
 }

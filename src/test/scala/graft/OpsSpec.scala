@@ -237,6 +237,18 @@ class OpsSpec extends AnyFunSuite {
     assert(bigRecall >= 0.75, s"dense-cluster recall $bigRecall too low")
   }
 
+  test("IVF fit fails loudly on ragged fit vectors") {
+    import spark.implicits._
+    val corpus = Seq((1L, Seq(1f, 0f, 0f)), (2L, Seq(0f, 1f, 0f)),
+      (3L, Seq(0f, 1f))).toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException] {
+      Similarity.ivfTopK(corpus, "vec_id", "embedding",
+        corpus, "vec_id", "embedding", k = 2, nCells = 2, nprobe = 1)
+    }
+    assert(e.getMessage.matches(".*ragged fit vectors: lengths (3 and 2|2 and 3)"),
+      e.getMessage)
+  }
+
   test("IVF fit sample: scan+filter only — no exchange, no sort, no TakeOrdered") {
     // the r3 fit used orderBy(h).limit(fitCap): a global TakeOrdered whose
     // reduce side ingests nPartitions×fitCap rows in ONE task — the judge's

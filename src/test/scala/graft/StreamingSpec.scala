@@ -176,4 +176,24 @@ class StreamingSpec extends AnyFunSuite {
     assert(m.select("lineage").distinct().collect()
       .map(_.getString(0)).forall(_.startsWith("stream batch=")))
   }
+
+  test("foreachBatch: a batch replayed after a crash before its checkpoint commit appends nothing") {
+    val manifest = tmp("stream_replay_manifest") + "/m"
+    val ckpt = tmp("stream_replay_ckpt")
+    def runToEnd(): Unit = {
+      val q = StreamingValidator.runIncremental(spark,
+        spark.readStream.schema(pagesSchema).parquet(stagingDir), spec,
+        manifest, ckpt, snapshotId = 7L)
+      q.processAllAvailable()
+      q.stop()
+    }
+    runToEnd()
+    val n = graft.report.Manifest.read(spark, manifest).count()
+    assert(n === PagesGen.NumParts)
+    // the crash: manifest rows written, commit log entry not — the restarted
+    // query replays the batch from its offset log
+    new java.io.File(ckpt, "commits").listFiles().foreach(_.delete())
+    runToEnd()
+    assert(graft.report.Manifest.read(spark, manifest).count() === n)
+  }
 }
